@@ -149,6 +149,24 @@ object SparkEntry {
         length(col("clean")).cast("long").as("clean_len"))
   }
 
+  /** 1-row (`name`: boolean) frame: a set-equals b on a's columns — the
+    * shared proof shape of every equality gate. One aggregation: a's rows
+    * tagged 1 and b's tagged 2, grouped by every column; a group whose
+    * OR of tags is not 3 is on one side only. A row with a NULL column
+    * is a mismatch too, as a NULL key never matches in an anti-join:
+    * duplicates are ignored and NULLs never compare equal. Array-typed
+    * columns compare structurally.
+    */
+  private[graft] def setEq(a: DataFrame, b: DataFrame, name: String): DataFrame = {
+    val keys = a.columns.toSeq.map(col)
+    def tagged(df: DataFrame, tag: Int) = df.select(keys :+ lit(tag).as("set_eq_tag"): _*)
+    tagged(a, 1).union(tagged(b, 2))
+      .groupBy(keys: _*).agg(bit_or(col("set_eq_tag")).as("set_eq_tags"))
+      .agg(count(when(col("set_eq_tags") =!= 3 || keys.map(_.isNull).reduce(_ || _),
+        1)).as("set_eq_misses"))
+      .select((col("set_eq_misses") === 0).as(name))
+  }
+
   /** Evaluates a 1-row (long, boolean, boolean) invariant gate EAGERLY,
     * unpersists its scoped caches, and returns the result as a literal
     * row. Gate caches exist only because the gate reads its inputs 2-3×
@@ -156,15 +174,6 @@ object SparkEntry {
     * cached plans in executor storage across Verify + bench repetitions
     * for the session lifetime.
     */
-  /** 1-row (`name`: boolean) frame: a set-equals b on a's columns (both
-    * anti-join directions empty) — the shared proof shape of every
-    * equality gate. Array-typed columns compare structurally.
-    */
-  private def setEq(a: DataFrame, b: DataFrame, name: String): DataFrame =
-    a.join(b, a.columns.toSeq, "left_anti").agg(count(lit(1)).as("d1"))
-      .crossJoin(b.join(a, a.columns.toSeq, "left_anti").agg(count(lit(1)).as("d2")))
-      .select((col("d1") + col("d2") === 0).as(name))
-
   private def evalGateRow(s: SparkSession, gate: DataFrame,
       cached: Seq[DataFrame], names: (String, String, String)): DataFrame = {
     val row = try gate.collect()(0) finally cached.foreach(_.unpersist())

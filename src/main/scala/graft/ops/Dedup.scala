@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 import graft.functions.{TextHashFunctions, VectorFunctions}
 
 /** Deduplication operators for training-data pipelines, each designed
@@ -801,25 +803,32 @@ object Dedup {
 
   // --------------------------------------------- near-dup cluster closure
 
-  /** Connected components over an undirected near-dup pair list —
-    * iterative min-label propagation, the step that turns pairwise
-    * near-dup evidence into "keep one doc per cluster".
+  /** Connected components over an undirected near-dup pair list — the
+    * step that turns pairwise near-dup evidence into "keep one doc per
+    * cluster".
     *
-    * Each node starts labeled with its own id; every round each node
-    * takes the min of its label and its neighbors' labels; converged
-    * when a round changes nothing. Rounds ≤ cluster diameter — near-dup
-    * clusters are shallow (a dup of a dup of X is usually also a direct
-    * dup of X), so this terminates in a handful of distributed
-    * hash-join/aggregate rounds with NO driver-side graph. Each round
-    * shuffles one slim (node, label) row per edge endpoint; at 100 TB
-    * the labels table is a fraction of the corpus (only docs that appear
-    * in a pair). `maxIter` bounds pathological chains; the iterative
-    * driver loop is the standard Spark shape for fixpoint algorithms
-    * (each iteration is fully distributed, only the converged? bit comes
-    * back to the driver).
+    * Two paths, chosen after the symmetrized edge list is checkpointed
+    * and counted:
+    *
+    *  - DRIVER union-find, when `edges × 16 B` is at most the session's
+    *    `spark.sql.autoBroadcastJoinThreshold` — the same size test
+    *    Spark applies before it collects a relation to broadcast it
+    *    (−1 disables it). The edges are collected and every set's root
+    *    is its minimum id. No cap: the result is always the fixpoint.
+    *    Integral id columns only; a NULL endpoint takes the loop.
+    *  - DISTRIBUTED min-label propagation otherwise: each node starts
+    *    labeled with its own id; every round each node takes the min of
+    *    its label and its neighbors' labels; converged when a round
+    *    changes nothing. Rounds ≤ cluster diameter, each a hash-join +
+    *    aggregate shuffling one slim (node, label) row per edge
+    *    endpoint, and only the converged? bit comes back to the driver.
+    *    `maxIter` bounds this path only: when it runs out before the
+    *    fixpoint is proven, the labels returned are the last round's and
+    *    one `[cc] not converged after N rounds` line goes to stderr.
     *
     * Output: (node, cluster_id) with cluster_id = min id in the
-    * component — deterministic for any edge order or partitioning.
+    * component — deterministic for any edge order or partitioning, and
+    * the same rows and schema on both paths.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -836,12 +845,60 @@ object Dedup {
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .localCheckpoint(true)
+    val nEdges = edges.count()
+    val threshold = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val onDriver =
+      if (threshold >= 0 && nEdges * 16L <= threshold) componentsOnDriver(edges)
+      else None
+    onDriver.getOrElse(componentsLoop(edges, nEdges, maxIter))
+  }
+
+  /** Union-find over the collected edge list, or None when an id column
+    * is not integral or an endpoint is NULL (the loop's semantics for
+    * those are kept by sending them to the loop). Rows carry the loop's
+    * schema: the id type, the node's nullability, a nullable cluster_id
+    * (the loop's min aggregate).
+    */
+  private def componentsOnDriver(edges: DataFrame): Option[DataFrame] = {
+    val idField = edges.schema("src")
+    val fromLong: Long => Any = idField.dataType match {
+      case LongType => identity
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => return None
+    }
+    val rows = edges.collect()
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val src = rows.map(r => r.get(0).asInstanceOf[Number].longValue)
+    val dst = rows.map(r => r.get(1).asInstanceOf[Number].longValue)
+    // dense indices in id order, so the smaller index is the smaller id;
+    // the list is symmetrized, so every node is some edge's src
+    val ids = src.distinct.sorted
+    val parent = Array.range(0, ids.length)
+    @annotation.tailrec
+    def find(i: Int): Int =
+      if (parent(i) == i) i
+      else { parent(i) = parent(parent(i)); find(parent(i)) }
+    src.indices.foreach { e =>
+      val ra = find(java.util.Arrays.binarySearch(ids, src(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, dst(e)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val schema = StructType(Seq(
+      StructField("node", idField.dataType, idField.nullable),
+      StructField("cluster_id", idField.dataType, nullable = true)))
+    val out = ids.indices.map(i => Row(fromLong(ids(i)), fromLong(ids(find(i)))))
+    Some(edges.sparkSession.createDataFrame(out.asJava, schema))
+  }
+
+  private def componentsLoop(edges: DataFrame, nEdges: Long, maxIter: Int): DataFrame = {
     // size per-round shuffles to the edge count: an iterative loop pays
     // per-round task-scheduling costs that AQE's per-stage coalescing
     // doesn't remove (see Graph.iterPartitions); at cluster scale the
     // cap is the session's configured parallelism and this is a no-op
     var labels: DataFrame = null
-    Graph.withShufflePartitions(edges, Graph.iterPartitions(edges, edges.count())) {
+    Graph.withShufflePartitions(edges, Graph.iterPartitions(edges, nEdges)) {
       val nodes = edges.select(col("src").as("node")).distinct()
         .localCheckpoint(true)
       // SELF-LOOP form of the min-label update (optimization round 11):
@@ -897,6 +954,7 @@ object Dedup {
         prevSum = s
         iter += steps
       }
+      if (!converged) Console.err.println(s"[cc] not converged after $iter rounds")
     }
     labels.withColumnRenamed("label", "cluster_id")
   }

@@ -132,12 +132,37 @@ class DedupSpec extends SparkSpec {
       (10L, 11L),                               // {10,11}
       (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L)) // chain {20..24}
       .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L,
-      10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
+    // the default threshold takes the driver union-find, −1 the loop
+    for (threshold <- Seq("10485760b", "-1")) {
+      val got = withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
+        Dedup.connectedComponents(pairs, "id_a", "id_b")
+      }.as[(Long, Long)].collect().toMap
+      assert(got === Map(
+        1L -> 1L, 2L -> 1L, 3L -> 1L,
+        10L -> 10L, 11L -> 10L,
+        20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L),
+        s"threshold $threshold")
+    }
+  }
+
+  test("connected components: the loop reports its cap, the driver path has none") {
+    // a 40-node chain needs 39 rounds; the loop stops at maxIter = 25
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def run(threshold: String): (Map[Long, Long], String) = {
+      val err = new java.io.ByteArrayOutputStream()
+      val got = Console.withErr(err) {
+        withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
+          Dedup.connectedComponents(chain, "id_a", "id_b")
+        }
+      }.as[(Long, Long)].collect().toMap
+      (got, err.toString)
+    }
+    val (capped, loopErr) = run("-1")
+    assert(loopErr.contains("[cc] not converged after 25 rounds"), loopErr)
+    assert(capped(40L) > 1L, "the capped loop cannot have reached the chain's end")
+    val (exact, driverErr) = run("10485760b")
+    assert(exact === (1L to 40L).map(_ -> 1L).toMap)
+    assert(!driverErr.contains("[cc]"), driverErr)
   }
 
   test("shingles: short text degrades to whole-string shingle") {

@@ -218,4 +218,50 @@ class PropertiesSpec extends SparkSpec {
       assert(est == exact)
     }
   }
+
+  test("connected components: driver union-find and the distributed loop agree") {
+    // chains up to 20 hops (some edges reversed) plus random pairs and
+    // self-loops, a few edges repeated as-is and reversed; Int, Long or
+    // mixed id columns; some lists carry one NULL endpoint, which the
+    // driver path hands to the loop
+    val pair = for (a <- Gen.choose(-10L, 80L); b <- Gen.choose(-10L, 80L)) yield (a, b)
+    val genCase = for {
+      hops <- Gen.choose(1, 20)
+      base <- Gen.choose(-10L, 50L)
+      flips <- Gen.listOfN(hops, Gen.oneOf(false, true))
+      random <- Gen.listOfN(12, pair)
+      loops <- Gen.listOfN(3, Gen.choose(-10L, 80L))
+      dups <- Gen.choose(0, 6)
+      ids <- Gen.oneOf("int", "long", "mixed")
+      withNull <- Gen.frequency(4 -> false, 1 -> true)
+    } yield {
+      val chain = (0 until hops).map(i => (base + i, base + i + 1))
+        .zip(flips).map { case (e, f) => if (f) e.swap else e }
+      val all = chain ++ random ++ loops.map(x => (x, x))
+      (all ++ all.take(dups) ++ all.take(dups).map(_.swap), ids, withNull, base)
+    }
+    forAll(genCase, n = 12) { case (edges, ids, withNull, base) =>
+      val longs =
+        if (withNull) (edges.map { case (a, b) => (Option(a), Option(b)) } :+
+          ((None, Some(base)))).toDF("id_a", "id_b")
+        else edges.toDF("id_a", "id_b")
+      val pairs = ids match {
+        case "int" => longs.select(col("id_a").cast("int").as("id_a"),
+          col("id_b").cast("int").as("id_b"))
+        case "mixed" => longs.select(col("id_a").cast("int").as("id_a"), col("id_b"))
+        case _ => longs
+      }
+      def run(threshold: String) =
+        withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
+          Dedup.connectedComponents(pairs, "id_a", "id_b")
+        }
+      val (driver, loop) = (run("10485760b"), run("-1"))
+      val local = driver.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      assert(local === !withNull, s"driver path taken: $local")
+      assert(driver.schema === loop.schema)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(driver) === rows(loop), s"ids=$ids edges=$edges")
+    }
+  }
 }

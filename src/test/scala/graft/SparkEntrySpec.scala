@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** Driver-contract smoke: every named query runs on sf0.001 and returns
   * rows; every oracle key maps to a real query; the flagship entry works.
   */
@@ -7,6 +9,30 @@ class SparkEntrySpec extends SparkSpec {
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  private def setEq(a: DataFrame, b: DataFrame): Boolean =
+    SparkEntry.setEq(a, b, "eq").head().getBoolean(0)
+
+  test("setEq is false for a row on one side only and for a NULL-bearing row on both") {
+    import spark.implicits._
+    val two = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
+    val three = Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("k", "v")
+    assert(!setEq(three, two), "extra row in a")
+    assert(!setEq(two, three), "extra row in b")
+    val withNull = Seq((Option(1L), "x"), (None, "y")).toDF("k", "v")
+    assert(!setEq(withNull, withNull), "a NULL column never compares equal")
+  }
+
+  test("setEq is true for equal sets with duplicates and any row order") {
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    val a = Seq((1L, Seq(1, 2), "x"), (2L, Seq(3), "y"), (1L, Seq(1, 2), "x"))
+      .toDF("k", "arr", "v")
+    val b = Seq((2L, Seq(3), "y"), (1L, Seq(1, 2), "x")).toDF("k", "arr", "v")
+    assert(setEq(a, b) && setEq(b, a))
+    // compared on a's columns, by name
+    assert(setEq(a, b.select($"v", $"k", $"arr", lit(0).as("extra"))))
   }
 
   test("every oracleSql key has a matching queries entry") {

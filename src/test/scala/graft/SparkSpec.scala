@@ -17,4 +17,15 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** sf0.001 testdata dir (smallest; specs that read testdata use it). */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with one session conf set to `value`, restoring it after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
