@@ -21,23 +21,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Engine.table(s, dir, name)
 
-  /** Spread a CPU-heavy per-row stage across the session's cores when the
-    * input scan under-parallelizes it — a small local parquet file is one
-    * split, so everything map-side downstream of it runs on ONE core
-    * (measured: func_variant_array spent 2.08 s in a single task at
-    * local[32]). A no-op whenever the scan already carries ≥ cores
-    * partitions: at real scale `maxPartitionBytes` supplies the
-    * parallelism and adding an exchange here would only move bytes
-    * (guide §2.6 — derive task counts from the data, never a constant;
-    * the constant being corrected here is the LOCAL file count). Hash
-    * repartition on a caller-chosen key, not round-robin, so no
-    * sort-before-repartition pass is paid (guide §2.5).
-    */
-  private def spreadForCpu(df: DataFrame, key: Column): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores, key)
-  }
-
   /** sql_recursive_cyclic's simple-path depth cap, shared by the Spark
     * query and its DuckDB oracle so a future testdata change cannot
     * silently diverge the two recursions.
@@ -780,8 +763,8 @@ object SparkEntry {
       // the whole row cost is the JSON construct + parse_json + four
       // variant_gets (~35 µs/row — measured 2.08 s in ONE task, the
       // single-split local scan), so the ~30 B/row exchange buys a
-      // cores-wide variant stage; no-op at scale (see spreadForCpu)
-      spreadForCpu(Engine.eventsTable(s, dir)
+      // cores-wide variant stage; no-op at scale (see Dedup.spreadWide)
+      Dedup.spreadWide(Engine.eventsTable(s, dir)
           .select(col("event_type"), col("value")), col("value"))
         .select(col("event_type"), v.as("v"))
         .select(col("event_type"),
@@ -2835,7 +2818,7 @@ object SparkEntry {
     // same as log(N/df))
     "text_tfidf" -> ((s, dir) =>
       TextAnalysis.tfidfTopTerms(
-        spreadForCpu(t(s, dir, "documents").select(col("doc_id"), col("text")),
+        Dedup.spreadWide(t(s, dir, "documents").select(col("doc_id"), col("text")),
           col("doc_id")),
         "doc_id", "text", k = 3)),
     // PII scrub: redaction counts + hash of the scrubbed text (proves
@@ -4151,7 +4134,7 @@ object SparkEntry {
     "dedup_multimodal_semantic" -> ((s, dir) => {
       val media = Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text")
       // spread the decode stage across cores (the single-split local scan
-      // ran it serially — see spreadForCpu) and FILL the three caches in
+      // ran it serially — see Dedup.spreadWide) and FILL the three caches in
       // dependency order before the gate's one collect: the gate plan's
       // broadcast-exchange futures otherwise all hit the still-empty
       // caches at once and each recomputes the full subtree — profiled
@@ -4159,7 +4142,7 @@ object SparkEntry {
       // (taskSum 9.3 s + 4.5 s + 3.1 s for one 9.3 s computation).
       // Optimization round 12, guide §2-fixed-cost / §5-caching.
       val feats = Multimodal.extractFeatures(
-          spreadForCpu(media, col("media_id")), dims = 16).toDF()
+          Dedup.spreadWide(media, col("media_id")), dims = 16).toDF()
         .select(col("media_id"), col("feature")).cache()
       feats.count()
       val lsh = Dedup.embeddingPairs(feats, "media_id", "feature",
@@ -5561,7 +5544,7 @@ object SparkEntry {
       // scan serialized scan+kernel+explode into ONE task (JobProf:
       // 0.9 s of the row); no-op at scale where maxPartitionBytes
       // supplies the split count (r12 §2.6, the text_tfidf medicine)
-      val grams = spreadForCpu(
+      val grams = Dedup.spreadWide(
           t(s, dir, "documents").select(col("doc_id"), col("text")),
           col("doc_id"))
         .select(col("doc_id"),
@@ -5629,7 +5612,7 @@ object SparkEntry {
       // and measured 1.6× WORSE with the spread inside the operator.
       // No-op at scale (≥ cores splits from maxPartitionBytes).
       TextAnalysis.segmentDedupHashed(
-        spreadForCpu(t(s, dir, "documents").select(col("doc_id"), col("text")),
+        Dedup.spreadWide(t(s, dir, "documents").select(col("doc_id"), col("text")),
           col("doc_id")),
         "doc_id", "text", w = 5, maxDocs = 3)),
     // production form: broadcast 8-byte gram hashes, not gram strings

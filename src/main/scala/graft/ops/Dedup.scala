@@ -64,16 +64,22 @@ object Dedup {
     if (target >= cap) cap else math.max(1, target.toInt)
   }
 
-  /** Re-widen an under-parallel relation for a map-side-CPU-heavy
-    * consumer (the uncapped screens probing a store table whose file
-    * count is below the session width). No-op whenever the input
-    * already carries ≥ cores partitions — at scale a corpus-sized store
-    * table always does.
+  /** Spread a CPU-heavy per-row stage across the session's cores when
+    * its input under-parallelizes it — a small local parquet file is one
+    * split, so everything map-side downstream of it runs on ONE core
+    * (measured: func_variant_array spent 2.08 s in a single task at
+    * local[32]; the uncapped screens probing a narrow store table did
+    * the same). A no-op whenever the input already carries ≥ cores
+    * partitions: at real scale `maxPartitionBytes` supplies the
+    * parallelism and adding an exchange here would only move bytes
+    * (guide §2.6 — derive task counts from the data, never a constant;
+    * the constant being corrected here is the LOCAL file count). Hash
+    * repartition on a caller-chosen key, not round-robin, so no
+    * sort-before-repartition pass is paid (guide §2.5).
     */
-  private[graft] def spreadWide(df: DataFrame, key: String): DataFrame = {
+  private[graft] def spreadWide(df: DataFrame, key: Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= cores) df
-    else df.repartition(cores, col(key))
+    if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores, key)
   }
 
   /** Posting-frequency skew valve shared by the winnow and containment
@@ -573,7 +579,7 @@ object Dedup {
     // table arrives under-parallel (a narrow local store read; no-op on
     // any corpus-sized store)
     val oldPost = {
-      val raw = spreadWide(standing.select(col("id"), col("fp")), "id")
+      val raw = spreadWide(standing.select(col("id"), col("fp")), col("id"))
         .select(col("id"), size(col("fp")).as("sz"), col("fp"))
         .select(col("id"), col("sz"), explode(col("fp")).as("f"))
       if (!bloomProbe) raw
@@ -733,7 +739,7 @@ object Dedup {
       // count-based form fused screen and count, which is exactly what
       // a prefix cannot do). Measured on the uncapped sf0.1 corpus:
       // 18.4 s count-form → 7.6 s prefix-form, identical 4096-pair
-      // output (ContainAB).
+      // output (OPTIMIZATION_r12.md).
       val need = expr(s"($thresholdBp * sz + 9999) div 10000")
       val pfxLen = greatest(col("sz") - need + lit(1), lit(1))
       // prefix slice in a projection BELOW the explode (the winnowPairs
@@ -928,9 +934,11 @@ object Dedup {
       // second (the update is a pure function), so the equal-sum test
       // still proves the fixpoint exactly. decimal(38,0): a wrapped
       // Long sum could alias across rounds at extreme node-count ×
-      // id-range
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
+      // id-range. None is a NULL sum: no labeled node (an empty pair
+      // list, or one whose every endpoint is NULL), which stays so
+      def labelSum(df: DataFrame): Option[BigDecimal] =
+        Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
+          .map(BigDecimal(_))
       var prevSum = labelSum(labels)
       var converged = false
       var iter = 0
@@ -950,7 +958,7 @@ object Dedup {
         labels = (1 to steps).foldLeft(labels)((l, _) => propagate(l))
           .localCheckpoint(false)
         val s = labelSum(labels)
-        converged = s.compareTo(prevSum) == 0
+        converged = s == prevSum
         prevSum = s
         iter += steps
       }

@@ -310,12 +310,6 @@ object Q4112 {
     }
   }
 
-  /** Integer division `sumCol div cntCol` (both Long; non-negative in all
-    * reference configs, so truncating and floor division coincide).
-    */
-  def intDiv(sumCol: Column, cntCol: Column): Column =
-    call_function("div", sumCol, cntCol)
-
   /** items ⋈ orders with the chosen physical strategy.
     * @param items  (key, price)  — build side
     * @param orders (fkey, group, quantity) — probe side
@@ -600,14 +594,15 @@ object Q4112 {
     * group domain is contiguous and bounded ([lo, hi], hi−lo+1 ≤
     * [[DenseAggMaxDomain]], proven from cached column min/max
     * statistics), each task accumulates sum/count into two plain long
-    * arrays indexed by (group − lo) and emits one (group, s, c) row per
-    * non-empty slot at task end. This replaces the per-row
+    * arrays indexed by (group − lo). This replaces the per-row
     * UnsafeFixedWidthAggregationMap probe (hash + row compare over a
     * ~1e6-entry map that misses cache) with a bounds-checked array add —
     * the profiled r9 attribution put that probe at the center of the
     * cold cfg10/17 gap (one uniform CPU-bound stage, ~430 ns/row, zero
-    * spill). The final reduce is Catalyst partial/final over ≤
-    * tasks × domain slim rows, then the same integer avg-of-avgs.
+    * spill). When `partitions × domain × 16 B` fits the broadcast
+    * threshold, the arrays merge on the driver in one job run EAGERLY by
+    * this call; otherwise the plan is lazy and combines them through an
+    * exchange ([[denseGroupedAvg]]).
     *
     * Exactness: identical arithmetic to [[part2]] — long sums with the
     * same wrap semantics, `s div c` per group, integer avg-of-avgs.
@@ -631,96 +626,171 @@ object Q4112 {
       minGroup, domain)
 
   /** The dense-accumulation stage of [[part2DenseAgg]] over a prepared
-    * (group, v) projection — exposed separately so the accumulation can
-    * be measured/tested without the join front half.
+    * (group, v) projection, exposed for tests. Each task fills its own
+    * slot arrays; they are combined one of two ways:
+    *
+    *  - On the DRIVER, when `partitions × domain × 16 B` is at most the
+    *    session's `spark.sql.autoBroadcastJoinThreshold` (−1 disables
+    *    it): EAGER, one `runJob` at call time whose result handler adds
+    *    each task's arrays into one driver copy as they arrive, then the
+    *    final scan (the reference's, q4112.c:326, :576); the returned
+    *    DataFrame holds the computed row. Spark hands over each
+    *    partition's successful result exactly once, so a retried task
+    *    cannot double-count, and no JVM-shared state is involved.
+    *  - Through an EXCHANGE otherwise (e.g. 1e9 rows: 32 tasks × 1e6
+    *    groups): lazy; one (group, s, c) row per non-empty slot into
+    *    Catalyst's partial/final aggregate and the avg-of-avgs.
+    *
+    * Both give the hash plan's answer. A nullable gv SCHEMA takes a
+    * guarded loop (the unguarded one would read a NULL group as 0): NULL
+    * group is its own group, `count` counts every row, `sum(v)` skips
+    * NULL v and is NULL for a group with none. Column min/max stats
+    * ignore NULLs, so non-NULL groups stay provably in-domain. Per-task
+    * sums wrap, as the hash plan's per-task buffers do; sums across tasks
+    * and over group averages throw under ANSI mode, as Spark's `sum`
+    * does, and wrap otherwise.
     */
   def denseGroupedAvg(gv: DataFrame, minGroup: Long, domain: Int): DataFrame = {
     require(domain > 0 && domain <= DenseAggMaxDomain,
       s"dense aggregate domain out of range: $domain")
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = gv.sparkSession
-    val mg = minGroup
-    val dom = domain
-    // Nullability decided from gv's SCHEMA, once, at plan time: the
-    // unguarded loop reads primitives directly and would misread a NULL
-    // group as 0 (silent cross-group merge when minGroup == 0, executor
-    // crash otherwise — round-9 advice item 2). A nullable input takes a
-    // guarded loop that reproduces the hash plan's semantics exactly:
-    // NULL group is its own group; `count(lit(1))` counts every row;
-    // `sum(v)` skips NULL v and is itself NULL when a group saw no
-    // non-NULL v (tracked per slot in `hasV`). Column min/max stats
-    // ignore NULLs, so non-NULL groups remain provably in-domain.
+    import spark.implicits._
     val gNullable = gv.schema.fields(0).nullable
     val vNullable = gv.schema.fields(1).nullable
-    val rdd = if (!gNullable && !vNullable) {
-      gv.queryExecution.toRdd.mapPartitions { it =>
-        val sums = new Array[Long](dom)
-        val cnts = new Array[Long](dom)
-        while (it.hasNext) {
-          val r = it.next() // primitives read immediately; row reuse is fine
-          val g = (r.getLong(0) - mg).toInt
-          sums(g) += r.getLong(1)
+    val nullable = gNullable || vNullable
+    val conf = spark.sessionState.conf
+    val rdd0 = gv.queryExecution.toRdd
+    val threshold = conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && rdd0.getNumPartitions.toLong * domain * 16L <= threshold) {
+      val acc = new DensePartial(domain, nullable)
+      spark.sparkContext.runJob(rdd0,
+        (it: Iterator[InternalRow]) => new DensePartial(domain, nullable).add(it, minGroup),
+        (_: Int, p: DensePartial) => acc.merge(p))
+      if (conf.ansiEnabled && acc.overflowed) throw new ArithmeticException("long overflow")
+      Seq(acc.avgOfAvgs(conf.ansiEnabled)).toDF("avg_avg_value")
+    } else {
+      val rdd = rdd0.mapPartitions(it =>
+        new DensePartial(domain, nullable).add(it, minGroup).rows(minGroup))
+      val schema = StructType(Seq(
+        StructField("g", LongType, nullable = gNullable),
+        StructField("s", LongType, nullable = vNullable),
+        StructField("c", LongType, nullable = false)))
+      org.apache.spark.sql.graft.bridge.internalDataFrame(spark, rdd, schema)
+        .groupBy(col("g"))
+        .agg(sum(col("s")).as("s2"), sum(col("c")).as("c2"))
+        .select(expr("s2 div c2").as("avg_value"))
+        .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
+        .select(expr("ss div cc").as("avg_avg_value"))
+    }
+  }
+
+  /** One task's (or, merged, the whole input's) per-slot long sums and
+    * counts; for a nullable input also which slots saw a non-NULL v and
+    * the NULL group's sum and count. The driver merge's task result.
+    */
+  private final class DensePartial(dom: Int, nullable: Boolean) extends Serializable {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    private val sums = new Array[Long](dom)
+    private val cnts = new Array[Long](dom)
+    private val hasV: Array[Boolean] = if (nullable) new Array[Boolean](dom) else null
+    private var nullSum = 0L
+    private var nullCnt = 0L
+    private var nullHasV = false
+    /** Set by [[merge]] when a cross-task sum wrapped. */
+    var overflowed = false
+
+    private def slotHasV(i: Int): Boolean = hasV == null || hasV(i)
+
+    /** Accumulates (group, v) rows, group `g` into slot `g − minGroup`. */
+    def add(it: Iterator[InternalRow], minGroup: Long): DensePartial = {
+      val (sums, cnts) = (this.sums, this.cnts) // locals in the row loop
+      if (!nullable) while (it.hasNext) {
+        val r = it.next() // primitives read immediately; row reuse is fine
+        val g = (r.getLong(0) - minGroup).toInt
+        sums(g) += r.getLong(1)
+        cnts(g) += 1L
+      } else while (it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0)) {
+          nullCnt += 1L
+          if (!r.isNullAt(1)) { nullSum += r.getLong(1); nullHasV = true }
+        } else {
+          val g = (r.getLong(0) - minGroup).toInt
           cnts(g) += 1L
-        }
-        new scala.collection.AbstractIterator[InternalRow] {
-          private var i = 0
-          private def skip(): Unit = while (i < dom && cnts(i) == 0L) i += 1
-          skip()
-          override def hasNext: Boolean = i < dom
-          override def next(): InternalRow = {
-            val row = new GenericInternalRow(Array[Any](i + mg, sums(i), cnts(i)))
-            i += 1; skip(); row
-          }
+          if (!r.isNullAt(1)) { sums(g) += r.getLong(1); hasV(g) = true }
         }
       }
-    } else {
-      gv.queryExecution.toRdd.mapPartitions { it =>
-        val sums = new Array[Long](dom)
-        val cnts = new Array[Long](dom)
-        val hasV = new Array[Boolean](dom)
-        var nullSum = 0L
-        var nullCnt = 0L
-        var nullHasV = false
-        while (it.hasNext) {
-          val r = it.next()
-          if (r.isNullAt(0)) {
-            nullCnt += 1L
-            if (!r.isNullAt(1)) { nullSum += r.getLong(1); nullHasV = true }
-          } else {
-            val g = (r.getLong(0) - mg).toInt
-            cnts(g) += 1L
-            if (!r.isNullAt(1)) { sums(g) += r.getLong(1); hasV(g) = true }
-          }
-        }
-        val dense = new scala.collection.AbstractIterator[InternalRow] {
-          private var i = 0
-          private def skip(): Unit = while (i < dom && cnts(i) == 0L) i += 1
-          skip()
-          override def hasNext: Boolean = i < dom
-          override def next(): InternalRow = {
-            val s: Any = if (hasV(i)) sums(i) else null
-            val row = new GenericInternalRow(Array[Any](i + mg, s, cnts(i)))
-            i += 1; skip(); row
-          }
-        }
-        if (nullCnt > 0L)
-          dense ++ Iterator[InternalRow](new GenericInternalRow(
-            Array[Any](null, if (nullHasV) nullSum else null, nullCnt)))
-        else dense
+      this
+    }
+
+    private def plus(a: Long, b: Long): Long = {
+      val s = a + b
+      if (((a ^ s) & (b ^ s)) < 0L) overflowed = true
+      s
+    }
+
+    /** Adds another task's partial slot by slot (wrapping; see [[overflowed]]). */
+    def merge(o: DensePartial): Unit = {
+      var i = 0
+      while (i < dom) {
+        sums(i) = plus(sums(i), o.sums(i))
+        cnts(i) += o.cnts(i)
+        if (hasV != null) hasV(i) |= o.hasV(i)
+        i += 1
+      }
+      nullSum = plus(nullSum, o.nullSum)
+      nullCnt += o.nullCnt
+      nullHasV |= o.nullHasV
+    }
+
+    /** One (group, s, c) row per non-empty slot — s NULL when the slot
+      * saw no non-NULL v — then the NULL group's row if it has any.
+      */
+    def rows(minGroup: Long): Iterator[InternalRow] = new Iterator[InternalRow] {
+      private var i = -1 // an Int cursor: no boxing per slot
+      private def advance(): Unit = { i += 1; while (i < dom && cnts(i) == 0L) i += 1 }
+      advance()
+      def hasNext: Boolean = i < dom
+      def next(): InternalRow = {
+        val row = new GenericInternalRow(
+          Array[Any](i + minGroup, if (slotHasV(i)) sums(i) else null, cnts(i)))
+        advance(); row
+      }
+    } ++ (if (nullCnt == 0L) Iterator.empty else Iterator.single(new GenericInternalRow(
+      Array[Any](null, if (nullHasV) nullSum else null, nullCnt))))
+
+    def avgOfAvgs(exact: Boolean): Option[Long] = {
+      val f = new AvgOfAvgs(exact)
+      var i = 0
+      while (i < dom) {
+        if (cnts(i) != 0L) f.group(sums(i), cnts(i), slotHasV(i))
+        i += 1
+      }
+      if (nullCnt != 0L) f.group(nullSum, nullCnt, nullHasV)
+      f.result
+    }
+  }
+
+  /** The driver-side final scan, fed one group at a time: the SQL
+    * plans' `sum(s div c) div count(1)`. A group with no non-NULL v has a
+    * NULL average, which the count counts and the sum skips; None is SQL
+    * NULL. `exact` (ANSI mode) throws on overflow as Spark's `sum` does.
+    */
+  private final class AvgOfAvgs(exact: Boolean) {
+    private var ss = 0L
+    private var cc = 0L
+    private var anyAvg = false
+    def group(s: Long, c: Long, hasV: Boolean): Unit = {
+      cc += 1L
+      if (hasV) {
+        ss = if (exact) Math.addExact(ss, s / c) else ss + s / c
+        anyAvg = true
       }
     }
-    val schema = StructType(Seq(
-      StructField("g", LongType, nullable = gNullable),
-      StructField("s", LongType, nullable = vNullable),
-      StructField("c", LongType, nullable = false)))
-    org.apache.spark.sql.graft.bridge.internalDataFrame(spark, rdd, schema)
-      .groupBy(col("g"))
-      .agg(sum(col("s")).as("s2"), sum(col("c")).as("c2"))
-      .select(expr("s2 div c2").as("avg_value"))
-      .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
-      .select(expr("ss div cc").as("avg_avg_value"))
+    def result: Option[Long] = if (anyAvg) Some(ss / cc) else None
   }
 
   /** Domain bound for [[part2SharedDense]]: 2^27 slots = 2 GB of
@@ -786,8 +856,9 @@ object Q4112 {
     * in depth, any task observing `attemptNumber > 0` poisons the
     * state and throws, and a failure listener drops the table so a
     * failed job never leaks the 2 GB arrays. Exactness: identical long
-    * wrap arithmetic and integer avg-of-avgs as [[part2]] (`s div c`
-    * per slot, `ss div cc` over slots), oracle-asserted per rep by the
+    * wrap arithmetic in the slots and integer avg-of-avgs as [[part2]]
+    * (`s div c` per slot, `ss div cc` over slots, in the final scan
+    * shared with [[denseGroupedAvg]]), oracle-asserted per rep by the
     * Matrix harness and by the `q4112_part2_shared_dense` gate.
     */
   def part2SharedDense(
@@ -973,21 +1044,15 @@ object Q4112 {
         val st = SharedDense.tables.get(key)
         if (st == null || st.poisoned)
           throw new IllegalStateException("shared dense aggregate poisoned")
-        // the final scan, single-threaded on the driver (same JVM):
-        // per-slot integer avg, then the integer avg of those — the
-        // same `s div c` / `ss div cc` truncation as the SQL plans
-        // (all-Java long division; non-negative by the packing bounds'
-        // contract, and exact for negatives too since Java and Spark's
-        // IntegralDivide both truncate toward zero)
-        var ss = 0L
-        var cc = 0L
+        // the final scan, single-threaded on the driver (same JVM)
+        val f = new AvgOfAvgs(spark.sessionState.conf.ansiEnabled)
         var i = 0
         while (i < dom) {
           val c = st.cnts.get(i)
-          if (c != 0L) { ss += st.sums.get(i) / c; cc += 1L }
+          if (c != 0L) f.group(st.sums.get(i), c, hasV = true)
           i += 1
         }
-        if (cc == 0L) None else Some(ss / cc)
+        f.result
       } finally SharedDense.tables.remove(key)
     Seq(res).toDF("avg_avg_value")
   }

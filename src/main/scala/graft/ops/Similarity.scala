@@ -59,8 +59,8 @@ object Similarity {
     // sample_hardneg spent 2.4 s of its 3.4 s in ONE task. Re-widen
     // under-parallel inputs; no-op at corpus scale where the scan
     // carries ≥ cores splits (guide §2.6).
-    val home = Dedup.spreadWide(home0, "dst_id")
-    val src = Dedup.spreadWide(src0, "src_id")
+    val home = Dedup.spreadWide(home0, col("dst_id"))
+    val src = Dedup.spreadWide(src0, col("src_id"))
     val labelled = home.columns.contains("dlab") && src.columns.contains("slab")
     val joined = home.join(src, Seq("bucket"))
       .filter(col("dst_id") =!= col("src_id"))

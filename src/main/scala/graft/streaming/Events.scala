@@ -313,7 +313,7 @@ object Events {
       // the standing side streams through the broadcast posting join —
       // re-widen an under-parallel store read (no-op at corpus scale)
       val standPost = graft.ops.Dedup
-        .spreadWide(standingSketches.select(col("id"), col("fp")), "id")
+        .spreadWide(standingSketches.select(col("id"), col("fp")), col("id"))
         .select(col("id").as("dup_of"), size(col("fp")).as("sz_s"), col("fp"))
         .select(col("dup_of"), col("sz_s"), explode(col("fp")).as("f"))
       return probePost.join(standPost, Seq("f"))

@@ -165,6 +165,19 @@ class DedupSpec extends SparkSpec {
     assert(!driverErr.contains("[cc]"), driverErr)
   }
 
+  test("connected components: an empty or all-NULL pair list gives the same rows on both paths") {
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val allNull = Seq[(Option[Long], Option[Long])]((None, None), (None, None))
+      .toDF("id_a", "id_b")
+    for (pairs <- Seq(empty, allNull)) {
+      def run(threshold: String) = withConf("spark.sql.autoBroadcastJoinThreshold", threshold)(
+        Dedup.connectedComponents(pairs, "id_a", "id_b"))
+      val (driver, loop) = (run("10485760b"), run("-1"))
+      assert(driver.schema === loop.schema)
+      assert(loop.collect().isEmpty && driver.collect().isEmpty)
+    }
+  }
+
   test("shingles: short text degrades to whole-string shingle") {
     val got = docs.sparkSession.range(1)
       .select(Dedup.shingles(lit("ab"), n = 5).as("sh"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{JaccardSorted, ShingleHashes}
-import graft.ops.{Aggregates, Dedup, Joins}
+import graft.ops.{Aggregates, Dedup, Joins, Q4112}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
@@ -262,6 +262,34 @@ class PropertiesSpec extends SparkSpec {
       assert(driver.schema === loop.schema)
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
       assert(rows(driver) === rows(loop), s"ids=$ids edges=$edges")
+    }
+  }
+  test("dense grouped average: both paths equal the hash plan around the threshold") {
+    // random (g, v) with NULLs in both columns over 1-8 partitions; the
+    // threshold is set one byte below (exchange plan) and at (driver
+    // merge) partitions × domain × 16 B
+    val genCase = for {
+      n <- Gen.choose(1, 60)
+      rows <- Gen.listOfN(n, Gen.zip(
+        Gen.frequency(6 -> Gen.choose(-3L, 9L).map(Option(_)), 1 -> Gen.const(None)),
+        Gen.frequency(6 -> Gen.choose(-50L, 500L).map(Option(_)), 1 -> Gen.const(None))))
+      parts <- Gen.choose(1, 8)
+    } yield (rows, parts)
+    forAll(genCase, n = 12) { case (rows, parts) =>
+      val gv = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts)).toDF("g", "v")
+      val expected = Q4112.part2(Seq((1L, 1L)).toDF("id", "price"),
+        gv.select(lit(1L).as("itemId"), col("v").as("quantity"), col("g").as("storeId")),
+        "id", "itemId", "price", "quantity", "storeId", Q4112.BroadcastHash).collect().head
+      val fits = parts.toLong * 13 * 16L // 13 slots: g in [-3, 9]
+      for ((threshold, merged) <- Seq((fits - 1, false), (fits, true))) {
+        val got = withConf("spark.sql.autoBroadcastJoinThreshold", s"${threshold}b") {
+          Q4112.denseGroupedAvg(gv, minGroup = -3L, domain = 13)
+        }
+        val local = got.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+        assert(local === merged, s"driver merge at threshold $threshold: $local")
+        assert(got.collect().head === expected, s"parts=$parts rows=$rows")
+      }
     }
   }
 }

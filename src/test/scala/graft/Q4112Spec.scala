@@ -143,6 +143,14 @@ class Q4112Spec extends SparkSpec {
       s"prefix-biased sample mis-planned: ${Q4112.lastChosenPlan}")
   }
 
+  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** Runs `body` at the default threshold (the dense aggregate's driver
+    * merge, on these small inputs) and at −1 (its exchange plan). */
+  private def onBothDensePaths(body: => Unit): Unit =
+    for (threshold <- Seq(spark.conf.get(BroadcastThreshold), "-1"))
+      withConf(BroadcastThreshold, threshold)(body)
+
   test("dense-array partial aggregate equals the hash partial plan exactly") {
     import org.apache.spark.sql.functions.col
     val spark2 = spark
@@ -154,14 +162,16 @@ class Q4112Spec extends SparkSpec {
         (col("id") % 37L + 100L).as("storeId")) // domain [100, 136]
     val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
-    val viaDense = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", minGroup = 100L, domain = 37).collect()(0).getLong(0)
-    assert(viaDense === viaHash)
-    // the adaptive chooser routes this bounded-domain shape to the dense form
-    val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
-      "quantity", "storeId").collect()(0).getLong(0)
-    assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
-    assert(adaptive === viaHash)
+    onBothDensePaths {
+      val viaDense = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
+        "quantity", "storeId", minGroup = 100L, domain = 37).collect()(0).getLong(0)
+      assert(viaDense === viaHash)
+      // the adaptive chooser routes this bounded-domain shape to the dense form
+      val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
+        "quantity", "storeId").collect()(0).getLong(0)
+      assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
+      assert(adaptive === viaHash)
+    }
   }
 
   test("dense-array partial aggregate reproduces hash-plan NULL semantics exactly") {
@@ -182,12 +192,55 @@ class Q4112Spec extends SparkSpec {
     val items = Seq((1L, 10L), (2L, 20L)).toDF("id", "price")
     val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0)
-    val viaDense = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", minGroup = 100L, domain = 3).collect()(0)
     // expected by hand: avgs {100->10, 101->60, 102->NULL, NULL->20};
     // sum(10,60,20)=90 over count 4 -> 90 div 4 = 22
     assert(viaHash.getLong(0) === 22L)
-    assert(viaDense.getLong(0) === viaHash.getLong(0))
+    onBothDensePaths {
+      val viaDense = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
+        "quantity", "storeId", minGroup = 100L, domain = 3).collect()(0)
+      assert(viaDense.getLong(0) === viaHash.getLong(0))
+    }
+  }
+
+  test("dense aggregate: the driver merge runs one job, the exchange plan more") {
+    import org.apache.spark.sql.functions.col
+    val gv = spark.range(0L, 50000L, 1L, 4)
+      .select((col("id") % 1000L).as("g"), (col("id") % 13L).as("v"))
+    // 4 partitions × 1000 slots × 16 B = 64000 B decides the path
+    def jobs(threshold: String): Int = countJobs(withConf(BroadcastThreshold, threshold) {
+      Q4112.denseGroupedAvg(gv, minGroup = 0L, domain = 1000).collect()
+    })
+    assert(jobs("64000b") === 1)
+    assert(jobs("63999b") > 1)
+  }
+
+  test("dense aggregate overflow follows the session's ANSI mode on both paths") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val half = (1L << 62) // two of these sum past Long.MaxValue in any order
+    // (a) one group's sum overflows only across tasks; (b) each group's
+    // average fits and their sum overflows
+    val acrossTasks = spark.range(0L, 2L, 1L, 2)
+      .select(lit(0L).as("g"), lit(half).as("v"))
+    val acrossGroups = spark.range(0L, 2L, 1L, 2)
+      .select(col("id").as("g"), lit(half).as("v"))
+    def overflows(run: => Long): Boolean =
+      Iterator.iterate[Throwable](intercept[Exception](run))(_.getCause)
+        .takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+    for (gv <- Seq(acrossTasks, acrossGroups)) {
+      def dense(threshold: String): Long = withConf(BroadcastThreshold, threshold) {
+        Q4112.denseGroupedAvg(gv, minGroup = 0L, domain = 2).collect()(0).getLong(0)
+      }
+      withConf("spark.sql.ansi.enabled", "true") {
+        assert(overflows(dense("10485760b")))
+        assert(overflows(dense("-1")))
+      }
+      withConf("spark.sql.ansi.enabled", "false") {
+        assert(dense("10485760b") === dense("-1"))
+      }
+    }
+    // the shared table's slot sums wrap; its final scan is the one above
+    withConf("spark.sql.ansi.enabled", "true")(assert(overflows(
+      Q4112.sharedDenseGroupedAvg(acrossGroups, 0L, 2L).collect()(0).getLong(0))))
   }
 
   test("shared-CAS-table aggregate equals the hash plan; the router picks it on singleton groups; re-execution is fresh") {

